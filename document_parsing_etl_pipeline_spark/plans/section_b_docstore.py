@@ -66,7 +66,9 @@ WHERE doc_id = 7 AND chunk_index BETWEEN 0 AND 1
 def q_chunk_range(spark, sf_dir):
     """Chunk range scan through the store-table function
     (docstore.chunk_range) — doc_id + index predicates push to the
-    scan; bucket-pruned on the bucketed store."""
+    scan. These in-memory chunks carry no ``bucket`` column, so the
+    scan is not bucket-pruned; on a store read back from
+    write_docstore it would be."""
     ch = chunking.chunk_documents(load_table(spark, sf_dir, "documents"))
     df = docstore.chunk_range(ch, doc_id=7, start=0, end=1)
     return _long(df, "chunk_index", "token_count")

@@ -93,8 +93,7 @@ class DocumentProcessor:
         )
 
     def get_document_info(self, doc_id: int) -> dict | None:
-        docs = self.tables["documents"].where(F.col("doc_id") == doc_id)
-        row = docs.collect()
+        row = docstore.where_doc(self.tables["documents"], doc_id).collect()
         if not row:
             return None
         info = row[0].asDict()
@@ -111,7 +110,7 @@ class DocumentProcessor:
     def get_document_chunks(self, doc_id: int,
                             start_chunk: int | None = None,
                             end_chunk: int | None = None) -> DataFrame:
-        ch = self.tables["chunks"].where(F.col("doc_id") == doc_id)
+        ch = docstore.where_doc(self.tables["chunks"], doc_id)
         if start_chunk is not None:
             ch = ch.where(F.col("chunk_index") >= start_chunk)
         if end_chunk is not None:
@@ -119,16 +118,13 @@ class DocumentProcessor:
         return ch.orderBy("chunk_index")
 
     def get_document_charts(self, doc_id: int) -> DataFrame:
-        return self.tables["charts"].where(F.col("doc_id") == doc_id)
+        return docstore.where_doc(self.tables["charts"], doc_id)
 
     def get_chart_with_image(self, doc_id: int, chart_id: int) -> dict | None:
         chart = (
-            self.tables["charts"]
-            .where(
-                (F.col("doc_id") == doc_id)
-                & (F.col("image_path")
+            docstore.where_doc(self.tables["charts"], doc_id)
+            .where(F.col("image_path")
                    == objectstore.object_path(doc_id, chart_id))
-            )
             .collect()
         )
         if not chart:

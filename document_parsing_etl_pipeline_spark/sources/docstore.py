@@ -11,16 +11,19 @@ Layout (under a root path):
     chunks/      — same bucketing → doc⋈chunks co-partitioned
     charts/      — same bucketing
 
-Bucketing by the join key means the API-surface queries
-(detail/chunk-range/charts-by-doc) prune to one bucket and join
-without a shuffle of the big side.
+Point lookups go through ``where_doc``: on a store read back from
+``write_docstore`` it adds the doc's ``bucket`` predicate, which
+Spark folds to a constant and prunes the scan to that one bucket
+directory. Frames without the ``bucket`` column (the in-memory
+``build_docstore`` tables, the streaming sink's ``batch_id=`` store)
+get the plain ``doc_id`` filter and scan everything they hold.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.chunking import chunk_documents, chunk_stats
@@ -46,10 +49,35 @@ def _ingest_ts(id_col: str = "doc_id"):
     return F.timestamp_seconds(F.lit(INGEST_EPOCH_S) + F.col(id_col))
 
 
+def bucket_of(doc_id: Column) -> Column:
+    """The store's bucket of a doc id: the one expression the writer
+    partitions by and the readers prune with."""
+    return F.pmod(F.xxhash64(doc_id), F.lit(N_BUCKETS))
+
+
 def _with_bucket(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(id_col)), F.lit(N_BUCKETS))
-    )
+    return df.withColumn("bucket", bucket_of(F.col(id_col)))
+
+
+def where_doc(df: DataFrame, doc_id: int) -> DataFrame:
+    """Rows of one doc. When ``df`` carries the store's ``bucket``
+    partition column, the doc's bucket is added as a constant
+    predicate, so the scan reads one bucket directory instead of all
+    of them.
+
+    The literal is cast to the stored ``doc_id`` type before hashing:
+    ``xxhash64`` hashes an int and a long differently, and a bucket
+    computed from the wrong type would silently match no rows. A
+    ``try_cast`` keeps an id outside that type's range an empty
+    lookup, as the plain ``doc_id`` filter makes it, instead of an
+    overflow error."""
+    pred = F.col("doc_id") == doc_id
+    if "bucket" in df.columns:
+        id_type = df.schema["doc_id"].dataType
+        pred = pred & (
+            F.col("bucket") == bucket_of(F.lit(doc_id).try_cast(id_type))
+        )
+    return df.where(pred)
 
 
 def build_docstore(docs: DataFrame) -> dict[str, DataFrame]:
@@ -190,11 +218,13 @@ def chunk_range(chunks: DataFrame, doc_id: int, start: int,
                 end: int) -> DataFrame:
     """GET /documents/{id}/chunks parity (reference api.py,
     repository.py:86-105): one doc's chunk_index range. Both
-    predicates push to the parquet scan; on the bucketed store the
-    doc_id filter prunes to one bucket's files."""
-    return chunks.where(
-        (F.col("doc_id") == doc_id)
-        & F.col("chunk_index").between(start, end)
+    predicates push to the parquet scan. Only on a store read back
+    from ``write_docstore`` does the scan prune to the doc's one
+    bucket directory (``where_doc``); over in-memory
+    ``build_docstore`` frames or the streaming store it reads all
+    the data it is given."""
+    return where_doc(chunks, doc_id).where(
+        F.col("chunk_index").between(start, end)
     ).select("doc_id", "chunk_index", "text_content", "token_count")
 
 
