@@ -1,6 +1,8 @@
 """Round-4 operators: bucketed range join, CDC latest-state, SCD2
 state history, sketch rank audit, DAU/WAU stickiness, BM25."""
 
+import os
+import shutil
 import sys
 
 import pytest
@@ -96,10 +98,13 @@ def test_range_join_rejects_outer_mode(spark):
         range_join(df, df, "k", "k", 0, 1, 1, how="left")
 
 
-def test_events_ts_normalization_is_timezone_independent(spark):
+def test_events_ts_normalization_is_timezone_independent(spark, tmp_path):
     # catalog.load_table must yield identical epoch nanos whatever
     # spark.sql.session.timeZone is — a cast through LTZ would shift
-    # NTZ wall clocks by the session offset
+    # NTZ wall clocks by the session offset. The shifted leg reads a
+    # copy of the table, so it resolves (and normalizes) afresh under
+    # the shifted session instead of reusing the resolved DataFrame.
+    shutil.copy(os.path.join(SF_DIR, "events.parquet"), tmp_path)
     tz = spark.conf.get("spark.sql.session.timeZone")
     base = [r["ts"] for r in
             load_table(spark, SF_DIR, "events")
@@ -107,7 +112,7 @@ def test_events_ts_normalization_is_timezone_independent(spark):
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
         shifted = [r["ts"] for r in
-                   load_table(spark, SF_DIR, "events")
+                   load_table(spark, str(tmp_path), "events")
                    .orderBy("event_id").limit(20).collect()]
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
