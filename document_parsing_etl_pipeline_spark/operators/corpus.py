@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import parse
 from .similarity import cosine_sim
 
 
@@ -23,9 +24,7 @@ def term_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     not the distinct set)."""
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\S+"), 0)
-        ).alias("term"),
+        F.explode(parse.tokens(F.col(text_col))).alias("term"),
     )
     # Vacuously-true null guard (doc_id is the corpus key, term comes
     # from regexp_extract_all — neither is ever null): it pins ONE
@@ -182,7 +181,7 @@ def contamination_check(
     side is broadcastable (eval corpora are tiny) and the big side
     never shuffles.
     """
-    words = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\S+"), 0)
+    words = parse.tokens(F.col(text_col))
     pos = (
         docs.select("doc_id", words.alias("words"))
         .where(F.size("words") >= shingle_n)
@@ -240,9 +239,7 @@ def dsir_logweights(
     can flip the hash)."""
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\S+"), 0)
-        ).alias("term"),
+        F.explode(parse.tokens(F.col(text_col))).alias("term"),
     )
     # null guard: vacuously true (doc_id is the corpus key; bucket is
     # pmod(md5) of a never-null token) — unifies the inferred filters
@@ -343,27 +340,16 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     and rounded to 6 decimals BEFORE the exact decimal per-doc sum, so
     engine libm ulp differences in log2 cannot reach the value hash.
     """
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\S+"), 0)
-        ).alias("tok"),
-    )
     # aggregate to per-(doc, token) term frequencies BEFORE the vocab
     # join: the scored table shrinks from total occurrences to distinct
     # terms per doc, and the inevitable hot keys ("the" is a few
     # percent of all tokens) contribute one row per document instead
     # of one per occurrence — AQE skew-split covers the rest
-    # null guard: vacuously true (see term_frequencies) — unifies the
-    # inferred per-branch filters so vocab/total/the scoring join all
-    # reuse ONE tokenize+aggregation exchange
-    tf = toks.where(
-        F.col("doc_id").isNotNull() & F.col("tok").isNotNull()
-    ).groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
-    vocab = tf.groupBy("tok").agg(F.sum("tf").alias("cnt"))
+    tf = term_frequencies(docs, text_col)
+    vocab = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
     total = tf.agg(F.sum("tf").alias("n_total"))
     surp = vocab.crossJoin(F.broadcast(total)).select(
-        "tok",
+        "term",
         F.round(-F.log2(F.col("cnt") / F.col("n_total")), 6).alias(
             "surprisal"
         ),
@@ -375,7 +361,7 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # tf × decimal surprisal is exact, so the sum equals the
     # per-occurrence formulation row-for-row.
     return (
-        tf.join(surp, "tok")
+        tf.join(surp, "term")
         .groupBy("doc_id")
         .agg(
             F.sum("tf").cast("long").alias("n_tokens"),
@@ -521,9 +507,7 @@ def sparse_sim_topk(
 
     toks = docs.select(
         "doc_id",
-        F.regexp_extract_all(
-            F.lower(F.col(text_col)), F.lit(r"\S+"), 0
-        ).alias("ws"),
+        parse.tokens(F.col(text_col)).alias("ws"),
     )
     # explode an index sequence + array indexing (codegen) — not a
     # transform() HOF (interpreted, SURVEY §4); guard size < n or

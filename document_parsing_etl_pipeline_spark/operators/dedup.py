@@ -21,21 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _norm_tokens(text: Column) -> Column:
-    r"""Distinct lowercase word tokens (set semantics for Jaccard).
-    token = \S+ run (== Python str.split(); whitespace-only text has
-    zero tokens, not [''])."""
-    return F.array_distinct(
-        F.regexp_extract_all(F.lower(text), F.lit(r"\S+"), 0)
-    )
-
-
-def normalized_text(text: Column) -> Column:
-    """== ``" ".join(text.lower().split())``."""
-    return F.array_join(
-        F.regexp_extract_all(F.lower(text), F.lit(r"\S+"), 0), " "
-    )
+from . import parse
 
 
 # ---------------------------------------------------------------- exact
@@ -49,7 +35,9 @@ def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     return (
         docs.select(
-            "doc_id", F.md5(normalized_text(F.col(text_col))).alias("content_hash")
+            "doc_id",
+            F.md5(parse.normalized_text(F.col(text_col)))
+            .alias("content_hash"),
         )
         .groupBy("content_hash")
         .agg(
@@ -111,7 +99,8 @@ def minhash_signature(
     # one row per doc per partition before the shuffle.
     ex = F.explode_outer if keep_empty else F.explode
     toks = docs.select(
-        "doc_id", ex(_norm_tokens(F.col(text_col))).alias("tok")
+        "doc_id",
+        ex(F.array_distinct(parse.tokens(F.col(text_col)))).alias("tok"),
     )
     return toks.groupBy("doc_id").agg(
         *[
@@ -216,7 +205,8 @@ def ngram_jaccard_pairs(
         docs, text_col, num_hashes, band_size, max_bucket, sigs=sigs
     )
     toks = docs.select(
-        "doc_id", _norm_tokens(F.col(text_col)).alias("tokens")
+        "doc_id",
+        F.array_distinct(parse.tokens(F.col(text_col))).alias("tokens"),
     )
     joined = (
         cands.join(toks.withColumnsRenamed({"doc_id": "doc_a", "tokens": "ta"}), "doc_a")
@@ -267,7 +257,8 @@ def containment_pairs(
         )
     cands = cands.select("doc_a", "doc_b")
     toks = docs.select(
-        "doc_id", _norm_tokens(F.col(text_col)).alias("tokens")
+        "doc_id",
+        F.array_distinct(parse.tokens(F.col(text_col))).alias("tokens"),
     )
     joined = (
         cands.join(
@@ -369,7 +360,9 @@ def simhash_signature(docs: DataFrame, text_col: str = "text",
     instead of interpreted aggregate() passes over the token array.
     """
     toks = docs.select(
-        "doc_id", F.explode(_norm_tokens(F.col(text_col))).alias("tok")
+        "doc_id",
+        F.explode(F.array_distinct(parse.tokens(F.col(text_col))))
+        .alias("tok"),
     ).withColumn("hv", _hexbits(F.col("tok"), bits))
     votes = toks.groupBy("doc_id").agg(
         *[
@@ -1038,10 +1031,7 @@ def span_dedup_profile(
     that does not distribute, the rolling-hash shuffle is the part
     that does.
     """
-    toks = docs.select(
-        "doc_id",
-        F.expr(f"regexp_extract_all({text_col}, '\\\\S+', 0)").alias("tk"),
-    )
+    toks = docs.select("doc_id", parse.words(F.col(text_col)).alias("tk"))
     base = toks.select(
         "doc_id",
         F.size("tk").cast("long").alias("n_tokens"),
@@ -1139,10 +1129,7 @@ def span_longest_match(
     sized, not corpus-sized."""
     from pyspark.sql.window import Window as _W
 
-    toks = docs.select(
-        "doc_id",
-        F.expr(f"regexp_extract_all({text_col}, '\\\\S+', 0)").alias("tk"),
-    )
+    toks = docs.select("doc_id", parse.words(F.col(text_col)).alias("tk"))
     base = toks.select(
         "doc_id",
         F.size("tk").cast("long").alias("n_tokens"),
@@ -1209,9 +1196,7 @@ def _shingles(
     index."""
     toks = docs.select(
         "doc_id",
-        F.regexp_extract_all(
-            F.lower(F.col(text_col)), F.lit(r"\S+"), 0
-        ).alias("ws"),
+        parse.tokens(F.col(text_col)).alias("ws"),
     )
     parts = [F.expr(f"ws[i + {j}]") for j in range(shingle_n)]
     return (

@@ -580,7 +580,8 @@ def _verified_candidates(spark, sf_dir):
             .distinct()
         )
         toks = docs.select(
-            "doc_id", dedup._norm_tokens(F.col("text")).alias("tokens"))
+            "doc_id",
+            F.array_distinct(parse.tokens(F.col("text"))).alias("tokens"))
         joined = (
             cands.join(toks.withColumnsRenamed(
                 {"doc_id": "doc_a", "tokens": "ta"}), "doc_a")

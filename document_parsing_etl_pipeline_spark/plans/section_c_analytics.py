@@ -3425,8 +3425,7 @@ def q_triangle_count(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        .alias("ws"),
+        parse.tokens(F.col("text")).alias("ws"),
     )
     parts3 = [F.expr(f"ws[i + {j}]") for j in range(3)]
     # r14 (guide §2.3/§2.4): one term-keyed exchange for the whole
@@ -5100,10 +5099,7 @@ def q_term_entropy_by_source(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)
-        ).alias("tok"),
+        F.explode(parse.tokens(F.col("text"))).alias("tok"),
     )
     tc = toks.groupBy("source", "tok").agg(
         F.count("*").cast("long").alias("c"))
@@ -5164,10 +5160,7 @@ def q_oov_rate(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "lang",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)
-        ).alias("tok"),
+        F.explode(parse.tokens(F.col("text"))).alias("tok"),
     )
     vocab = (
         toks.groupBy("tok").agg(F.count("*").alias("tf"))
@@ -5414,10 +5407,7 @@ def q_js_source_divergence(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)
-        ).alias("tok"),
+        F.explode(parse.tokens(F.col("text"))).alias("tok"),
     )
     tc = toks.groupBy("source", "tok").agg(
         F.count("*").cast("long").alias("c"))
@@ -5792,10 +5782,7 @@ def q_simpson_diversity(spark, sf_dir):
     tc = (
         docs.select(
             "source",
-            F.explode(
-                F.regexp_extract_all(F.lower(F.col("text")),
-                                     F.lit(r"\S+"), 0)
-            ).alias("tok"),
+            F.explode(parse.tokens(F.col("text"))).alias("tok"),
         )
         .groupBy("source", "tok")
         .agg(F.count("*").cast("long").alias("c"))
@@ -5859,10 +5846,7 @@ def q_heaps_law(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")),
-                                 F.lit(r"\S+"), 0)
-        ).alias("tok"),
+        F.explode(parse.tokens(F.col("text"))).alias("tok"),
     )
     firsts = toks.groupBy("tok").agg(F.min("doc_id").alias("first_doc"))
     n = docs.agg(F.count("*").cast("long").alias("n_docs"))
@@ -5935,8 +5919,7 @@ def q_shingle_novelty(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.regexp_extract_all(F.lower(F.col("text")),
-                             F.lit(r"\S+"), 0).alias("ws"),
+        parse.tokens(F.col("text")).alias("ws"),
     ).where(F.size("ws") >= 1)
     sh = toks.select(
         "doc_id",
@@ -7582,19 +7565,9 @@ def q_dedup_token_savings(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "source",
-        F.md5(
-            F.coalesce(
-                F.array_join(
-                    F.regexp_extract_all(
-                        F.lower(F.col("text")), F.lit(r"\S+"), 0),
-                    " ",
-                ),
-                F.lit(""),
-            )
-        ).alias("h"),
-        F.size(F.regexp_extract_all(
-            F.lower(F.col("text")), F.lit(r"\S+"), 0))
-        .cast("long").alias("n_toks"),
+        F.md5(F.coalesce(parse.normalized_text(F.col("text")), F.lit("")))
+        .alias("h"),
+        F.size(parse.tokens(F.col("text"))).cast("long").alias("n_toks"),
     )
     canon = toks.groupBy("h").agg(F.min("doc_id").alias("keep_id"))
     return (

@@ -78,7 +78,7 @@ def q_dedup_materialize(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     hashed = docs.select(
         "doc_id", "n_chars",
-        F.md5(dedup.normalized_text(F.col("text"))).alias("content_hash"),
+        F.md5(parse.normalized_text(F.col("text"))).alias("content_hash"),
     )
     w = Window.partitionBy("content_hash").orderBy("doc_id")
     return (
@@ -1284,7 +1284,8 @@ def q_dedup_recall_capture(spark, sf_dir):
     # endpoints — without it the tokenize ran on the scan's single
     # local split (round 13; no-op on a multi-split production scan)
     toks = spread_scan(docs).select(
-        "doc_id", dedup._norm_tokens(F.col("text")).alias("tokens"))
+        "doc_id",
+        F.array_distinct(parse.tokens(F.col("text"))).alias("tokens"))
     b = (
         sh.join(toks.withColumnsRenamed(
             {"doc_id": "doc_a", "tokens": "ta"}), "doc_a")

@@ -417,3 +417,20 @@ def test_session7f_new_query_plan_shapes(spark):
     assert "CartesianProduct" not in plan
     plan = _executed(QUERIES["q_dedup_recall_capture"](spark, SF_DIR))
     assert "CartesianProduct" not in plan
+
+
+def test_tokenize_aggregate_family_reuses_exchanges(spark):
+    """The vacuous null guard in corpus.term_frequencies (and its dsir
+    twin) makes every consumer branch share one tokenize+aggregate
+    exchange; AQE shows that only at runtime, as ReusedExchange nodes
+    in the final adaptive plan. Losing the guard, or a consumer
+    re-tokenizing on its own, drops these counts."""
+    expected = {"q_unigram_logprob": 2, "q_bm25_scores": 1,
+                "q_dsir_weights": 2}
+    got = {}
+    for name in expected:
+        df = QUERIES[name](spark, SF_DIR)
+        df.collect()
+        final = df._jdf.queryExecution().executedPlan().finalPhysicalPlan()
+        got[name] = final.toString().count("ReusedExchange")
+    assert got == expected

@@ -1,10 +1,18 @@
-from pyspark.sql import Row
+import ast
+import os
 
+import pyarrow.parquet as pq
+from pyspark.sql import Row
+from pyspark.sql import functions as F
+
+import document_parsing_etl_pipeline_spark as pkg
 from document_parsing_etl_pipeline_spark.operators import entities
 from document_parsing_etl_pipeline_spark.operators import text_analysis as ta
 from document_parsing_etl_pipeline_spark.operators.parse import (
-    document_metadata, normalize_documents,
+    document_metadata, normalize_documents, normalized_text, tokens, words,
 )
+
+from conftest import SF_DIR
 
 
 def _docs(spark, *texts):
@@ -17,6 +25,92 @@ def _docs(spark, *texts):
 def test_normalize(spark):
     df = normalize_documents(_docs(spark, "  Hello   World\t! "))
     assert df.collect()[0].norm_text == "hello world !"
+
+
+def test_token_rule_is_java_whitespace(spark):
+    # (text, words, tokens, normalized_text). Python str.split() splits
+    # every case below; Spark splits only on [ \t\n\x0B\f\r], and
+    # DuckDB's RE2 \S+ additionally keeps \x0B inside a token.
+    cases = [
+        ("A\xa0B c", ["A\xa0B", "c"], ["a\xa0b", "c"], "a\xa0b c"),
+        ("A\x85B", ["A\x85B"], ["a\x85b"], "a\x85b"),
+        ("A\x1cB", ["A\x1cB"], ["a\x1cb"], "a\x1cb"),
+        ("A\u2003B", ["A\u2003B"], ["a\u2003b"], "a\u2003b"),
+        ("A\u3000B", ["A\u3000B"], ["a\u3000b"], "a\u3000b"),
+        ("A\x0bB", ["A", "B"], ["a", "b"], "a b"),
+        (" \t\n\r\x0c\x0b", [], [], ""),
+    ]
+    df = spark.createDataFrame([(c[0],) for c in cases], "text string")
+    got = df.select(
+        "text", words("text").alias("w"), tokens("text").alias("t"),
+        normalized_text(F.col("text")).alias("n"),
+    ).collect()
+    assert [(r.text, r.w, r.t, r.n) for r in got] == cases
+
+
+def test_testdata_text_has_only_shared_whitespace():
+    # Spark and the DuckDB oracle split \x0B differently, and both keep
+    # non-ASCII whitespace inside tokens where str.split() splits (see
+    # parse.words): hash parity and str.split() parity of token-based
+    # queries hold only while the corpora contain neither.
+    shared = set(" \t\n\r\x0c")
+    for sf in (SF_DIR, os.path.join(os.path.dirname(SF_DIR), "sf0.01")):
+        texts = pq.read_table(
+            f"{sf}/documents.parquet", columns=["text"]
+        ).column("text").to_pylist()
+        bad = [t for t in texts
+               if any(c.isspace() and c not in shared for c in t)]
+        assert len(texts) > 0 and bad == [], (sf, len(bad))
+
+
+def _str_value(node):
+    """The text of a string literal or f-string, else None."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    if isinstance(node, ast.JoinedStr):
+        return "".join(v.value for v in node.values
+                       if isinstance(v, ast.Constant))
+    return None
+
+
+def _tokenize_sites(tree):
+    """Lines of Spark-side tokenizations: regexp_extract_all with a
+    \\S+ pattern literal (bare or in F.lit), or an F.expr string that
+    calls regexp_extract_all with \\S+. Oracle SQL is never an F.expr
+    argument, so the DuckDB reference strings are not counted."""
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        fn = node.func
+        name = fn.attr if isinstance(fn, ast.Attribute) else getattr(
+            fn, "id", "")
+        if name == "regexp_extract_all":
+            for a in node.args[1:2] + [k.value for k in node.keywords
+                                       if k.arg == "regexp"]:
+                if isinstance(a, ast.Call) and a.args:  # F.lit(...)
+                    a = a.args[0]
+                if _str_value(a) == r"\S+":
+                    yield node.lineno
+        elif name == "expr":
+            text = "".join(_str_value(a) or "" for a in node.args)
+            if "regexp_extract_all(" in text and r"\S+" in text:
+                yield node.lineno
+
+
+def test_token_rule_lives_only_in_parse():
+    root = os.path.dirname(pkg.__file__)
+    owner = os.path.join(root, "operators", "parse.py")
+    found = []
+    for d, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(d, f)
+            if not f.endswith(".py") or path == owner:
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            found += [f"{os.path.relpath(path, root)}:{n}"
+                      for n in _tokenize_sites(tree)]
+    assert found == [], "tokenize via operators/parse.py: " + str(found)
 
 
 def test_metadata_counts(spark):
